@@ -1,7 +1,7 @@
 """IVF index (reference Q4/Q5, vervectordb/__init__.py:411-487).
 
 The oracle gate covers the fixed-centroid query path (ivf_search_pruned);
-here we grade the MLlib KMeans build path the way the reference's harness
+here we grade the sampled k-means build path the way the reference's harness
 grades IVF: recall@k vs the brute-force oracle (examples/datawhale.py:142-148,
 201-202 — measured 0.748 at nprobe=8/16 clusters). Plus structural checks:
 pruning really restricts the scanned clusters.
@@ -403,3 +403,146 @@ def test_ivf_recall_floor_on_real_encoder_corpus(spark):
     rec = sum(len(got.get(q, set()) & t) / len(t)
               for q, t in truth.items()) / len(truth)
     assert rec >= 0.85, f"encoder-corpus recall floor broken: {rec:.3f}"
+
+
+# ------------------------------------------------- sampled driver-side build
+def test_build_independent_of_partitioning(emb):
+    """The fit sample is chosen by content, so the same rows as one
+    partition or as seven give bit-identical centroids and the same
+    (id, cluster_id) assignment — no dependence on the core count."""
+    import numpy as np
+
+    one = IVFIndex.build(emb.coalesce(1), n_clusters=8, seed=42)
+    seven = IVFIndex.build(emb.repartition(7), n_clusters=8, seed=42)
+    assert np.array_equal(one.centroids, seven.centroids)
+
+    def pairs(idx):
+        return {(r["vec_id"], r["cluster_id"])
+                for r in idx.assigned.select("vec_id", "cluster_id").collect()}
+
+    a = pairs(one)
+    assert a == pairs(seven)
+    assert len(a) == emb.count() and len({c for _, c in a}) > 1
+
+
+def test_build_runs_at_most_two_jobs(spark, emb):
+    """The build is one sample job, not one job per k-means iteration:
+    under its own job group it launches at least 1 job (so the check
+    cannot pass vacuously) and at most 2."""
+    sc = spark.sparkContext
+    group = "test-ivf-build-jobs"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        IVFIndex.build(emb, n_clusters=16, seed=42)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert 1 <= len(jobs) <= 2, jobs
+
+
+def _batch(X, ids, null_rows=()):
+    import pyarrow as pa
+
+    emb = pa.array([None if i in null_rows else [float(v) for v in x]
+                    for i, x in enumerate(X)], pa.list_(pa.float32()))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(ids, pa.int64()), emb, pa.array([f"m{i}" for i in ids])],
+        names=["vec_id", "embedding", "meta"])
+
+
+def _numpy_nearest(X, C):
+    import numpy as np
+
+    return ((X[:, None, :].astype(np.float64) - C[None]) ** 2).sum(-1).argmin(1)
+
+
+def test_assign_kernel_matches_numpy_on_sliced_batches():
+    """The Arrow kernel reads the list's flat values buffer; on a sliced
+    batch (list offsets not starting at 0, values buffer the parent's) it
+    must still pick each row's own vector: argmin equals NumPy's, and the
+    other columns pass through unchanged."""
+    import numpy as np
+
+    from vervectordb_spark.operators.ivf import _nearest_batch
+
+    rng = np.random.default_rng(3)
+    X = rng.normal(size=(64, 12)).astype(np.float32)
+    C = rng.normal(size=(5, 12))
+    rb = _batch(X, list(range(64)))
+    for lo, n in ((0, 64), (7, 30), (50, 14), (63, 1), (10, 0)):
+        part = rb.slice(lo, n)
+        out = _nearest_batch(part, C, "embedding")
+        assert out.schema.names == ["vec_id", "embedding", "meta", "cluster_id"]
+        assert out.column(0).equals(part.column(0))
+        assert out.column(2).equals(part.column(2))
+        got = out.column(3).to_numpy(zero_copy_only=False)
+        assert np.array_equal(got, _numpy_nearest(X[lo:lo + n], C))
+
+
+def test_assign_kernel_null_embeddings_get_null_cluster():
+    """NULL embeddings (MLlib rejected them) keep their row and get a NULL
+    cluster_id; the rows around them, sliced or not, still match NumPy."""
+    import numpy as np
+
+    from vervectordb_spark.operators.ivf import _nearest_batch
+
+    rng = np.random.default_rng(4)
+    X = rng.normal(size=(20, 6)).astype(np.float32)
+    C = rng.normal(size=(3, 6))
+    rb = _batch(X, list(range(20)), null_rows={0, 5, 6, 19})
+    for lo, n in ((0, 20), (4, 10)):
+        out = _nearest_batch(rb.slice(lo, n), C, "embedding")
+        cid = out.column(3).to_pylist()
+        for i, c in zip(range(lo, lo + n), cid):
+            if i in {0, 5, 6, 19}:
+                assert c is None
+            else:
+                assert c == int(_numpy_nearest(X[i:i + 1], C)[0])
+
+
+def test_assign_kernel_rejects_ragged_and_wrong_length():
+    import numpy as np
+    import pyarrow as pa
+
+    from vervectordb_spark.operators.ivf import _nearest_batch
+
+    C = np.zeros((2, 3))
+    ragged = pa.RecordBatch.from_arrays(
+        [pa.array([[1.0, 2.0, 3.0], [1.0, 2.0]], pa.list_(pa.float32()))],
+        names=["embedding"])
+    with pytest.raises(ValueError, match="differ in length"):
+        _nearest_batch(ragged, C, "embedding")
+    short = pa.RecordBatch.from_arrays(
+        [pa.array([[1.0, 2.0]], pa.list_(pa.float32()))], names=["embedding"])
+    with pytest.raises(ValueError, match="centroid length"):
+        _nearest_batch(short, C, "embedding")
+
+
+def test_build_empty_frame_raises(spark):
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="no rows"):
+        IVFIndex.build(empty, n_clusters=4)
+    all_null = spark.createDataFrame(
+        [(1, None), (2, None)], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="no rows"):
+        IVFIndex.build(all_null, n_clusters=4)
+
+
+def test_build_null_embeddings_kept_unprobed(spark):
+    """Through Spark: NULL-embedding rows are left out of the fit, kept in
+    `assigned` with a NULL cluster_id, and never returned by a search."""
+    import numpy as np
+
+    rng = np.random.default_rng(9)
+    X = rng.normal(size=(40, 4))
+    rows = [(i, None if i % 10 == 0 else [float(v) for v in X[i]])
+            for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    idx = IVFIndex.build(df, n_clusters=3, seed=1)
+    got = {r["vec_id"]: r["cluster_id"] for r in idx.assigned.collect()}
+    assert len(got) == 40
+    assert {i for i, c in got.items() if c is None} == {0, 10, 20, 30}
+    hits = idx.search([float(v) for v in X[1]], top_k=40, nprobe=3).collect()
+    assert {r["vec_id"] for r in hits} == set(range(40)) - {0, 10, 20, 30}

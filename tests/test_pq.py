@@ -405,3 +405,16 @@ def test_batch_adc_unprobed_cluster_rows_masked_not_crash(spark, emb):
     in_c0 = {r["vec_id"] for r in ivf.assigned.filter(
         F.col("cluster_id") == 0).select("vec_id").collect()}
     assert all(r["vec_id"] in in_c0 for r in rows)
+
+
+def test_lloyd_kmeans_blocked_scores_match_one_block(monkeypatch):
+    """The shared k-means scores rows in blocks once n·k passes the score
+    budget (an IVF sample at large k); the blocked pass must fit the same
+    centroids as the single-block pass."""
+    from vervectordb_spark.functions import kmeans
+
+    X = np.random.default_rng(11).normal(size=(3000, 8))
+    whole = kmeans.lloyd_kmeans(X, 7, seed=1)
+    monkeypatch.setattr(kmeans, "_SCORE_CELLS", 7 * 250)  # 12 blocks
+    blocked = kmeans.lloyd_kmeans(X, 7, seed=1)
+    assert np.allclose(whole, blocked, rtol=0, atol=1e-9)

@@ -513,3 +513,47 @@ def test_store_imi_facade_and_persistence(spark, tmp_path):
     assert loaded._imi is not None
     again = loaded.imi_search(qv, top_k=3, a=2, b=2)
     assert again[0]["vector_id"] == ids[7]
+
+
+def test_repeated_checkpoint_after_ivf_rebuilds_then_save(spark, tmp_path):
+    """load → merge → ivf_search → checkpoint → merge → ivf_search →
+    checkpoint → save(new path) → load. The second checkpoint overwrites
+    the files the first one wrote, and the IVF rebuilt in between read
+    them: unless checkpoint() moves the index's assignment onto the new
+    frame, save() fails with FAILED_READ_FILE."""
+    import numpy as np
+
+    dim = 8
+    rng = np.random.default_rng(17)
+    schema = "vec_id string, embedding array<float>"
+
+    def frame(model_rows):
+        return spark.createDataFrame(
+            [(v, [float(x) for x in e]) for v, e in model_rows], schema)
+
+    model = {f"v{i}": rng.random(dim, dtype=np.float32) for i in range(60)}
+    path = str(tmp_path / "db")
+    st = VectorStore(spark, dim)
+    st.ingest(frame(model.items()))
+    st.save(path)
+    st = VectorStore.load(spark, path, vector_dim=dim)
+    for rnd in range(2):
+        batch = {f"n{rnd}_{j}": rng.random(dim, dtype=np.float32)
+                 for j in range(10)}
+        batch.update({f"v{rnd * 5 + j}": rng.random(dim, dtype=np.float32)
+                      for j in range(5)})
+        st.merge(frame(batch.items()))
+        model.update(batch)
+        q = batch[f"n{rnd}_0"]
+        hits = st.ivf_search([float(x) for x in q], top_k=3, nprobe=2)
+        assert hits and hits[0]["vector_id"] == f"n{rnd}_0"
+        st.checkpoint()
+    out = str(tmp_path / "out")
+    st.save(out)
+    back = VectorStore.load(spark, out, vector_dim=dim)
+    pdf = back.df.select("vec_id", "embedding").toPandas()
+    assert len(pdf) == len(model) == 80
+    for v, e in zip(pdf["vec_id"], pdf["embedding"]):
+        assert np.array_equal(np.asarray(e, np.float32), model[v]), v
+    assert back._ivf is not None
+    assert back._ivf.assigned.count() == len(model)

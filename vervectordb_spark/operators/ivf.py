@@ -7,8 +7,12 @@ clusters (:441), and rescores candidates exactly.
 
 Spark-first: the inverted list IS the partition layout.
 
-  * build  = MLlib KMeans (distributed fit, seeded) → `cluster_id` column
-             → `write.partitionBy("cluster_id")` for persisted stores;
+  * build  = ONE Spark job collects a bounded, content-chosen fit sample
+             (at most 256 rows per centroid); seeded Lloyd's k-means runs
+             on the driver (functions/kmeans.py, shared with the PQ
+             codec); `cluster_id` = the Euclidean-nearest centroid,
+             appended by a lazy map-only Arrow GEMM kernel →
+             `write.partitionBy("cluster_id")` for persisted stores;
   * search = centroid scoring happens on the DRIVER against k×dim floats
              (broadcast-scale state, exactly like the reference's 16-row
              scoring, :438) — NO Spark job; the probed-cluster filter
@@ -17,8 +21,10 @@ Spark-first: the inverted list IS the partition layout.
              is the exact brute-force kernel + TakeOrderedAndProject.
 
 At 100 TB: raise k so each cluster ≈ a few GB (k ≈ thousands); centroid
-set stays driver-sized (4k × 1024 dims × 8B = 32 MB). Skewed clusters are
-split by AQE; nprobe trades recall for scan volume linearly.
+set stays driver-sized (4k × 1024 dims × 8B = 32 MB). The fit sample is
+the driver cost that grows with k: 256·k rows, 1M × 1024 float32 = 4 GB
+at k=4096. Skewed clusters are split by AQE; nprobe trades recall for
+scan volume linearly.
 
 Unlike the reference, results carry the candidate's TRUE cluster_id
 (quirk B2: the reference labels every hit with the best probed cluster,
@@ -33,9 +39,15 @@ import numpy as np
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from vervectordb_spark.operators.search import brute_force_topk
 from vervectordb_spark.functions.identifiers import sql_ident
+from vervectordb_spark.functions.kmeans import lloyd_kmeans
+from vervectordb_spark.operators.search import brute_force_topk
+
+#: fit-sample rows per centroid — FAISS's default max_points_per_centroid;
+#: more rows than this move centroids by less than the sampling noise
+SAMPLE_PER_CENTROID = 256
 
 
 def _cosine_to_centroids(query_vec: Sequence[float], centroids: np.ndarray) -> np.ndarray:
@@ -45,6 +57,102 @@ def _cosine_to_centroids(query_vec: Sequence[float], centroids: np.ndarray) -> n
     denom = cn * qn
     with np.errstate(divide="ignore", invalid="ignore"):
         return np.where(denom == 0.0, 0.0, centroids @ q / denom)
+
+
+def _embedding_rows(arr, emb_col: str) -> tuple[np.ndarray, np.ndarray]:
+    """(valid, X) for one Arrow list<float|double> column: `valid` marks
+    its non-NULL rows, X holds those rows as an (n_valid, dim) float64
+    matrix read straight from the list's flat values buffer — no per-row
+    Python objects. Honors slicing: a sliced array's offsets do not start
+    at 0 and its values buffer is the unsliced parent's."""
+    offs = arr.offsets.to_numpy()
+    valid = (np.ones(len(arr), dtype=bool) if arr.null_count == 0
+             else arr.is_valid().to_numpy(zero_copy_only=False))
+    starts = offs[:-1][valid]
+    lens = offs[1:][valid] - starts
+    dim = int(lens[0]) if len(lens) else 0
+    if (lens != dim).any():
+        raise ValueError(f"{emb_col}: vectors differ in length "
+                         f"({lens.min()} to {lens.max()})")
+    lo, span = int(offs[0]), int(offs[-1] - offs[0])
+    flat = arr.values.slice(lo, span)
+    if flat.null_count and arr.flatten().null_count:
+        raise ValueError(f"{emb_col}: vectors hold NULL elements")
+    flat = flat.to_numpy(zero_copy_only=False)
+    if len(starts) * dim == span:  # NULL rows own no elements: contiguous
+        X = flat.reshape(len(starts), dim)
+    else:
+        X = flat[(starts - lo)[:, None] + np.arange(dim)]
+    return valid, X.astype(np.float64, copy=False)
+
+
+def _fit_sample(df: DataFrame, n_rows: int, emb_col: str) -> np.ndarray:
+    """At most `n_rows` non-NULL embeddings as a float64 matrix, chosen by
+    content: the vectors with the smallest xxhash64, ties broken by the
+    vector itself (equal vectors are interchangeable rows). ONE Spark job
+    — a TakeOrderedAndProject over the scan, fetched as Arrow. The sample
+    and its row order, and so the fitted centroids, depend only on the
+    multiset of vectors: not on partitioning, the core count, or the row
+    ids (a store's uuid4 ids differ between otherwise equal runs)."""
+    emb = F.col(emb_col)
+    tbl = (df.filter(emb.isNotNull()).orderBy(F.xxhash64(emb), emb)
+           .limit(n_rows).select(emb_col).toArrow())
+    return _embedding_rows(tbl.column(0).combine_chunks(), emb_col)[1]
+
+
+def _nearest_batch(rb, centroids: np.ndarray, emb_col: str):
+    """One Arrow batch of assign_nearest: `rb` with `cluster_id` int32
+    appended (NULL for a NULL embedding). The other columns pass through
+    as the same Arrow arrays."""
+    import pyarrow as pa
+
+    valid, X = _embedding_rows(
+        rb.column(rb.schema.get_field_index(emb_col)), emb_col)
+    cid = np.zeros(rb.num_rows, dtype=np.int32)
+    if len(X):
+        if X.shape[1] != centroids.shape[1]:
+            raise ValueError(
+                f"{emb_col}: vector length {X.shape[1]} != centroid length "
+                f"{centroids.shape[1]}")
+        scores = X @ centroids.T
+        scores *= -2.0
+        scores += (centroids ** 2).sum(axis=1)
+        cid[valid] = scores.argmin(axis=1)
+    col = pa.array(cid, type=pa.int32(), mask=None if valid.all() else ~valid)
+    return pa.RecordBatch.from_arrays(
+        [*rb.columns, col],
+        schema=rb.schema.append(pa.field("cluster_id", pa.int32())))
+
+
+def assign_nearest(df: DataFrame, centroids: np.ndarray,
+                   emb_col: str = "embedding") -> DataFrame:
+    """`df` plus `cluster_id` int = the index of the Euclidean-nearest row
+    of `centroids` (ties → the lowest index) — the k-means objective the
+    fit minimizes. A lazy, map-only mapInArrow pass: per Arrow batch one
+    (n × k) GEMM over the embedding list's flat values buffer
+    (argmin ‖c‖² − 2x·c), every input column passed through as Arrow,
+    only `cluster_id` appended. A pure function of each row's vector, so
+    re-deriving it over a rewritten copy of the same rows gives the same
+    layout.
+
+    Rows with a NULL embedding get a NULL cluster_id: they stay in the
+    frame but no probe (`cluster_id IN (...)`) ever selects them. Vectors
+    whose length differs from the centroids', or that hold NULL elements,
+    fail the task with a ValueError. An existing `cluster_id` column is
+    replaced."""
+    if "cluster_id" in df.columns:
+        df = df.drop("cluster_id")
+    bc = df.sparkSession.sparkContext.broadcast(
+        np.asarray(centroids, dtype=np.float64))
+    out_schema = T.StructType(
+        df.schema.fields + [T.StructField("cluster_id", T.IntegerType(), True)])
+
+    def assign(batches):
+        cent = bc.value
+        for rb in batches:
+            yield _nearest_batch(rb, cent, emb_col)
+
+    return df.mapInArrow(assign, out_schema)
 
 
 def assign_by_centroids(df: DataFrame, centroids_df: DataFrame,
@@ -310,27 +418,30 @@ class IVFIndex:
     def build(cls, df: DataFrame, n_clusters: int = 16, seed: int = 42,
               id_col: str = "vec_id", emb_col: str = "embedding",
               max_iter: int = 20) -> "IVFIndex":
-        """Distributed k-means fit (the reference fits sklearn on a
-        float64 copy of the whole matrix, :416-418 — single-machine-bound;
-        MLlib iterates map-side partial sums instead)."""
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
+        """k-means fit on a bounded sample, then a lazy assignment pass.
 
-        feats = df.withColumn(
-            "_features", array_to_vector(F.col(emb_col).cast("array<double>"))
-        )
-        # k <= N or the fit dies; limit(k).count() proves N >= k by scanning
-        # at most k rows instead of the whole table (a full count() at
-        # 100 TB is a complete scan spent on a sanity clamp)
-        n_clusters = max(1, min(n_clusters, feats.limit(n_clusters).count()))
-        km = KMeans(k=n_clusters, seed=seed, maxIter=max_iter,
-                    featuresCol="_features", predictionCol="cluster_id")
-        model = km.fit(feats)
-        assigned = model.transform(feats).drop("_features").withColumn(
-            "cluster_id", F.col("cluster_id").cast("int")
-        )
-        centroids = np.array([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
-        return cls(assigned, centroids, id_col=id_col, emb_col=emb_col)
+        The reference fits sklearn on a float64 copy of the whole matrix
+        (:416-418 — single-machine-bound). Here ONE Spark job collects at
+        most SAMPLE_PER_CENTROID·n_clusters rows chosen by content
+        (_fit_sample), seeded Lloyd's k-means (`max_iter` iterations at
+        most) runs on the driver, and `assigned` is assign_nearest over
+        the whole frame — no job until it is read. A distributed fit would
+        cost one Spark job per iteration to cluster a few MB.
+
+        k is clamped to the sample size (k <= N, or the fit has too few
+        points); NULL embeddings are left out of the fit and get a NULL
+        cluster_id. Raises ValueError when no row has an embedding."""
+        X = _fit_sample(df, SAMPLE_PER_CENTROID * max(1, n_clusters),
+                        emb_col)
+        if not len(X):
+            raise ValueError(
+                "IVFIndex.build: no rows with a non-NULL embedding to fit")
+        # the sample holds min(N, 256·k) rows, so it doubles as the k <= N
+        # clamp without a separate count job
+        k = max(1, min(n_clusters, len(X)))
+        centroids = lloyd_kmeans(X, k, seed=seed, max_iter=max_iter)
+        return cls(assign_nearest(df, centroids, emb_col=emb_col), centroids,
+                   id_col=id_col, emb_col=emb_col)
 
     def default_nprobe(self) -> int:
         """Reference default: max(n_clusters // 2, 8) — vervectordb/__init__.py:441."""
@@ -718,9 +829,10 @@ class IVFIndex:
 
         Assignment = argmax cosine(row, centroid) computed with the fold
         kernel on both engines, so the whole IVF query path — assignment,
-        probing, pruning, rescoring — is DuckDB-oracle-checkable (the MLlib
-        KMeans build path is graded by the recall harness instead; its
-        centroids are not reproducible in SQL).
+        probing, pruning, rescoring — is DuckDB-oracle-checkable (the
+        `build` path — sampled Lloyd's fit, Euclidean assignment — is
+        graded by the recall harness instead; its centroids are not
+        reproducible in SQL).
         """
         assigned = assign_by_centroids(df, centroids_df, id_col=id_col, emb_col=emb_col)
         rows = centroids_df.orderBy("cluster_id").collect()

@@ -10,9 +10,10 @@ Reference behavior reproduced:
   * decode = codebook gather; compression ratio = dim·4B → m·1B.
 
 Spark-first design:
-  * fit: ONE distributed k-means per subspace over `F.slice` projections
-    (MLlib KMeans, seeded). Training reads a bounded sample
-    (reference train_pq samples min(10k, N), :493-494 → df.sample/limit);
+  * fit: one seeded Lloyd's k-means per subspace on the driver
+    (functions/kmeans.py, shared with the IVF build). Training reads a
+    bounded sample (reference train_pq samples min(10k, N), :493-494 →
+    df.sample/limit);
   * codebooks: tiny (m × 256 × dim/m floats) — broadcast, never joined;
   * encode/decode: Arrow-batched mapInPandas, vectorized argmin/gather per
     batch (NumPy/BLAS) — the UDF is unavoidable (argmin against a 3-D
@@ -27,7 +28,7 @@ pass (no shuffle); the broadcast is ≤ 256·dim·8B. Re-encoding after
 codebook refresh is an idempotent full-scan rewrite.
 
 Oracle path: with codebooks FROZEN as a table, encode is expressible in
-SQL (argmin over 256 rows per subspace) — see queries_pq.py; the MLlib-fit
+SQL (argmin over 256 rows per subspace) — see queries_pq.py; the fitted
 codebooks themselves are graded by reconstruction-error tests (the
 reference's own acceptance metric, examples/datawhale.py:59-61).
 """
@@ -41,40 +42,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _lloyd_kmeans(X: np.ndarray, k: int, seed: int, max_iter: int = 20) -> np.ndarray:
-    """Seeded vectorized Lloyd's over a driver-resident sample. Empty
-    clusters keep their previous centroid (deterministic).
-
-    Assignment scores are float32 and skip the ‖x‖² term (constant per row
-    — argmin_c ‖x−c‖² == argmin_c (‖c‖² − 2x·c)), with in-place GEMM +
-    axpy so the (n × k) score matrix is allocated once, not 3× per
-    iteration. That's ~7× over the naive float64 broadcast expression
-    (26 → 4 ms/iter at n=10k, k=256, d=16 — the float64 temporaries, not
-    the GEMM, were the cost). Centroid UPDATES stay float64 (bincount
-    sums over the original X), so precision loss is confined to
-    assignment rounding on near-ties."""
-    rng = np.random.RandomState(seed)
-    centers = X[rng.choice(len(X), size=k, replace=False)].copy()
-    Xf = np.ascontiguousarray(X, dtype=np.float32)
-    scores = np.empty((len(X), k), dtype=np.float32)
-    for _ in range(max_iter):
-        cf = np.ascontiguousarray(centers.T, dtype=np.float32)
-        np.matmul(Xf, cf, out=scores)
-        scores *= -2.0
-        scores += (cf ** 2).sum(0)[None, :]
-        assign = scores.argmin(axis=1)
-        counts = np.bincount(assign, minlength=k)
-        sums = np.empty((k, X.shape[1]))
-        for j in range(X.shape[1]):  # d bincounts beat a k-loop of masks
-            sums[:, j] = np.bincount(assign, weights=X[:, j], minlength=k)
-        nonempty = counts > 0
-        new = centers.copy()
-        new[nonempty] = sums[nonempty] / counts[nonempty, None]
-        if np.allclose(new, centers):
-            break
-        centers = new
-    return centers
+from vervectordb_spark.functions.kmeans import lloyd_kmeans
 
 
 def with_residual(df: DataFrame, centroids_df: DataFrame,
@@ -129,12 +97,11 @@ class PQCodec:
         sample_size: int = 10_000,
         max_iter: int = 20,
     ) -> "PQCodec":
-        """Per-subspace distributed k-means on a bounded sample.
+        """Per-subspace k-means on a bounded sample.
 
         Mirrors the reference's divisibility check (:163-164) and sampling
-        cap (:493-494). One MLlib KMeans job per subspace (m small jobs over
-        the same cached sample beats one giant concatenated job: each fit
-        sees only dim/m columns).
+        cap (:493-494). The sample is collected once; each subspace is one
+        driver-side Lloyd's fit over its dim/m columns.
         """
         if dim % n_subquantizers != 0:
             raise ValueError(
@@ -174,7 +141,7 @@ class PQCodec:
         k = min(codebook_size, len(X))
         books = []
         for s in range(n_subquantizers):
-            centers = _lloyd_kmeans(
+            centers = lloyd_kmeans(
                 X[:, s * sub_dim:(s + 1) * sub_dim], k, seed=seed + s,
                 max_iter=max_iter,
             )

@@ -25,8 +25,9 @@ reference (which leaves HNSW stale after update/delete —
 vervectordb/__init__.py:311-335), derived indexes here are invalidated on
 every mutation and rebuilt on demand, so they can never dangle.
 
-Scale: vectors never visit the driver. Only query vectors, centroids
-(k×dim) and PQ codebooks (8×256×(dim/8)) are driver/broadcast state.
+Scale: the corpus never visits the driver whole. Only query vectors,
+centroids (k×dim), PQ codebooks (8×256×(dim/8)) and the bounded samples
+they are fitted on are driver/broadcast state.
 """
 
 from __future__ import annotations
@@ -319,7 +320,7 @@ class VectorStore:
         )
         # widen=False: ingest's output file layout would otherwise vary
         # with the session core count, and the stored vectors feed
-        # IVFIndex.build (MLlib KMeans) downstream — fit inputs stay
+        # the index fits downstream — fit inputs stay
         # partition-stable (partitioning.py's rule; ADVICE r11)
         emb = embed_documents(
             chunks, dim=self.vector_dim, text_col="chunk_text",
@@ -833,6 +834,30 @@ class VectorStore:
         # call otherwise)
         release_blocks(self.spark.sparkContext, ids)
         self._df_ckpt_ids = set()
+        self._rebase_derived()
+
+    def _rebase_derived(self) -> None:
+        """Move derived frames built from the pre-checkpoint df off the
+        files they read: the NEXT checkpoint overwrites those files, and a
+        frame still reading them fails with FAILED_READ_FILE when saved or
+        searched. A built IVF keeps its centroids and re-derives its
+        assignment from the new df (a map-only pass, free until read); a
+        disk-loaded IVF reads its own ivf/ files and is left as is. The
+        other derived frames are cleared and rebuild on demand."""
+        from vervectordb_spark.functions.checkpoint import release_blocks
+
+        if self._ivf is not None and not self._ivf_from_disk:
+            from vervectordb_spark.operators.ivf import assign_nearest
+
+            self._ivf.assigned = assign_nearest(
+                self.df, self._ivf.centroids, emb_col=self._ivf.emb_col)
+            release_blocks(self.spark.sparkContext, self._ivf_ckpt_ids)
+            self._ivf_ckpt_ids = set()
+        if self._res_encoded is not None:
+            self._res_encoded.unpersist()
+        self._res_encoded = None
+        self._ann = None
+        self._imi = None
 
     def version_history(self) -> list[dict]:
         """Manifests of the versioned-checkpoint log, newest first."""
